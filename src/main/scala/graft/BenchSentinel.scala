@@ -44,11 +44,16 @@ object BenchSentinel {
     if (j < 0) return (Map.empty, None)
     val body = archiveText.substring(i, j)
     // r18 contract lines mark the per-query unit as deciseconds
-    // ("qunit":"ds", emitted just before the queries map); pre-r18
+    // ("qunit":"ds", emitted before the queries map); pre-r18
     // archives carried 1-decimal seconds. Normalize to seconds so the
     // regression sentinel compares like with like across the format
-    // change.
-    val prefix = archiveText.substring(math.max(0, i - 80), i)
+    // change. The unit is looked up between the start of the contract
+    // line (its `{"metric"` opener) and the queries map, so any number
+    // of fields may sit between the two.
+    val lineStart = math.max(
+      archiveText.lastIndexOf("{\\\"metric\\\"", i),
+      archiveText.lastIndexOf("{\"metric\"", i))
+    val prefix = archiveText.substring(math.max(0, lineStart), i)
     val deci =
       prefix.contains("\\\"qunit\\\":\\\"ds\\\"") || prefix.contains("\"qunit\":\"ds\"")
     val re = """\\?"(\d+)\\?":([0-9.]+)""".r

@@ -1073,39 +1073,26 @@ object Dedup {
       s"${new org.apache.hadoop.fs.Path(gen0).getName}\t${genDataBytes(spark, gen0)}")
   }
 
-  /** Parent-pointer sidecar a DELTA label generation carries: its
-    * content names the generation the delta overlays. A generation
-    * without it is a full BASE table. */
-  private val LabelParentFile = "_graft_label_parent"
-
-  /** Full-chain sidecar (r17, one-read resolution): every generation a
-    * [[mergeClusterLabels]] writes carries the COMPLETE chain from
-    * itself down to its base — one `<genName>\t<dataBytes>` line per
-    * generation, newest first — so a reader resolves the chain with
-    * O(1) driver FS calls (manifest + this file) instead of one
-    * parent-pointer read per generation: K round-trips is fine on HDFS
-    * but chatty on object stores at high read cadence. `dataBytes` is
-    * the generation's parquet data-file footprint recorded at write
-    * time, feeding [[readClusterLabels]]' overlay broadcast gate for
-    * free. Generations written before r17 lack the file; the reader
-    * falls back to the parent-pointer walk (and one listing per delta),
-    * so mixed-age chains stay readable. */
+  /** Full-chain sidecar (r17, one-read resolution): every label
+    * generation carries the COMPLETE chain from itself down to its base
+    * — one `<genName>\t<dataBytes>` line per generation, newest first —
+    * so a reader resolves the chain with O(1) driver FS calls (manifest
+    * + this file). `dataBytes` is the generation's parquet data-file
+    * footprint recorded at write time, feeding [[readClusterLabels]]'
+    * overlay broadcast gate for free. A generation without it is not a
+    * label generation this code wrote, and fails loudly. */
   private val LabelChainFile = "_graft_label_chain"
 
   /** Resolved chain: generation names newest-first ending at the base,
-    * with each generation's recorded (or legacy-listed) data-file
-    * bytes. `fromSidecar` marks an r17+ chain (resolved from the
-    * one-read chain sidecar): every delta generation of such a chain
-    * was written by [[updateClusterLabelsDeltaFlagged]] and carries the
-    * `_new` column with one shared schema, so the overlay may read all
-    * deltas in ONE `spark.read` (r18) instead of one per generation. */
-  private case class LabelChainInfo(
-      gens: Seq[String], bytes: Seq[Long], fromSidecar: Boolean = false) {
+    * with each generation's recorded data-file bytes. Every delta
+    * generation was written by [[updateClusterLabelsDeltaFlagged]] and
+    * carries the `_new` column with one shared schema. */
+  private case class LabelChainInfo(gens: Seq[String], bytes: Seq[Long]) {
     def head: String = gens.head
     /** On-disk bytes of the DELTA generations — the overlay build side's
       * size estimate (the base, `gens.last`, never enters the overlay). */
     def deltaBytes: Long = bytes.init.sum
-    /** The sidecar content a CHILD generation of `newGen` prepends to. */
+    /** The sidecar content a CHILD generation prepends its line to. */
     def lines: Seq[String] =
       gens.lazyZip(bytes).map((g, b) => s"$g\t$b").toSeq
   }
@@ -1125,56 +1112,30 @@ object Dedup {
   /** The live label chain, newest first, ending at its base generation
     * — `[live]` for a full live generation, `[liveDelta, ..., base]`
     * after delta-mode merges. One manifest read + one chain-sidecar
-    * read on the current layout; the parent-pointer walk only runs for
-    * pre-r17 generations. */
+    * read. */
   private def labelChain(
       spark: org.apache.spark.sql.SparkSession, dir: String): LabelChainInfo = {
     val liveName = new org.apache.hadoop.fs.Path(
       IndexMaintenance.resolveLive(spark, dir)).getName
-    IndexMaintenance.readParamsSidecar(
-        spark, new org.apache.hadoop.fs.Path(dir, liveName).toString, LabelChainFile) match {
-      case Some(content) =>
-        val parsed = content.split("\n").toSeq.map(_.trim).filter(_.nonEmpty).map { line =>
-          line.split("\t") match {
-            case Array(g, b) => (g, b.toLongOption.getOrElse(
-              throw new IllegalStateException(
-                s"labelChain: corrupt chain sidecar line '$line' in $dir/$liveName")))
-            case _ => throw new IllegalStateException(
-              s"labelChain: corrupt chain sidecar line '$line' in $dir/$liveName")
-          }
-        }
-        require(parsed.nonEmpty && parsed.head._1 == liveName,
-          s"labelChain: chain sidecar in $dir/$liveName does not start with itself — corrupt")
-        LabelChainInfo(parsed.map(_._1), parsed.map(_._2), fromSidecar = true)
-      case None =>
-        // legacy walk (pre-r17 generations): one sidecar read per
-        // generation, then one listing per generation for the bytes the
-        // broadcast gate needs
-        @scala.annotation.tailrec
-        def walk(gen: String, acc: Vector[String]): Vector[String] = {
-          // loud guard: a corrupted/hand-edited parent pointer forming a
-          // cycle must fail, not hang the reader
-          require(!acc.contains(gen),
-            s"labelChain: parent-pointer cycle at $gen in $dir — the chain is corrupt")
-          IndexMaintenance.readParamsSidecar(
-            spark, new org.apache.hadoop.fs.Path(dir, gen).toString, LabelParentFile) match {
-            case Some(parent) => walk(parent, acc :+ gen)
-            case None => acc :+ gen
-          }
-        }
-        val gens = walk(liveName, Vector.empty)
-        LabelChainInfo(gens, gens.map(g =>
-          genDataBytes(spark, new org.apache.hadoop.fs.Path(dir, g).toString)))
+    val content = IndexMaintenance.readParamsSidecar(
+        spark, new org.apache.hadoop.fs.Path(dir, liveName).toString, LabelChainFile)
+      .getOrElse(throw new IllegalStateException(
+        s"labelChain: generation $dir/$liveName has no $LabelChainFile sidecar — " +
+          "label chains written before the chain sidecar are not readable; rebuild " +
+          "the table with writeClusterLabels"))
+    def corrupt(line: String) = new IllegalStateException(
+      s"labelChain: corrupt chain sidecar line '$line' in $dir/$liveName")
+    val parsed = content.split("\n").toSeq.map(_.trim).filter(_.nonEmpty).map { line =>
+      line.split("\t") match {
+        case Array(g, b) => (g, b.toLongOption.getOrElse(throw corrupt(line)))
+        case _ => throw corrupt(line)
+      }
     }
+    require(parsed.nonEmpty && parsed.head._1 == liveName,
+      s"labelChain: chain sidecar in $dir/$liveName does not start with itself — corrupt")
+    LabelChainInfo(parsed.map(_._1), parsed.map(_._2))
   }
 
-  /** The label table a reader sees: the live generation, overlaid with
-    * any delta chain (newest generation wins per id). A single full
-    * generation — the non-delta lifecycle — reads as a plain parquet
-    * scan with zero overhead; a delta chain resolves with one id-keyed
-    * `max_by` aggregate. Resolves per call, so a reader picks up a
-    * concurrent [[mergeClusterLabels]] swap on its next read with zero
-    * restart. */
   /** On-disk byte budget for broadcasting the overlay in
     * [[readClusterLabels]] (`spark.graft.labels.overlayBroadcastBytes`,
     * default 64 MB of delta parquet). Slim (id, cluster_id, _new) rows
@@ -1192,91 +1153,66 @@ object Dedup {
         s"spark.graft.labels.overlayBroadcastBytes must be a byte count, got '$v'"))
     }
 
+  /** The label table a reader sees: the live generation, overlaid with
+    * any delta chain (newest generation wins per id). A single full
+    * generation — the non-delta lifecycle — reads as a plain parquet
+    * scan with zero overhead; a delta chain resolves with one scan of
+    * every delta, one id-keyed `max_by` aggregate over the touched rows
+    * and one broadcast left join onto the base. Resolves per call, so a
+    * reader picks up a concurrent [[mergeClusterLabels]] swap on its
+    * next read with zero restart. */
   def readClusterLabels(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     if (!IndexMaintenance.hasManifest(spark, dir))
       return spark.read.parquet(dir)
     val chain = labelChain(spark, dir)
-    if (chain.gens.lengthCompare(1) == 0)
-      spark.read.parquet(new org.apache.hadoop.fs.Path(dir, chain.head).toString)
+    def genPath(g: String) = new org.apache.hadoop.fs.Path(dir, g).toString
+    if (chain.gens.lengthCompare(1) == 0) spark.read.parquet(genPath(chain.head))
     else {
       // precedence = position from the base (larger = newer); gen
-      // numbers would work too but the chain order is the contract
+      // numbers would work too but the chain order is the contract.
+      // ONE spark.read of every delta generation (r18): precedence is
+      // derived from the source file's generation directory, so a
+      // K-delta chain costs one listing + one scan node instead of K
+      // reads unioned. A file matching no chain generation fails the
+      // read loudly rather than overlaying at a null precedence.
       val n = chain.gens.length
-      // ONE spark.read of every delta generation (r18, sidecar-resolved
-      // chains only — their shared (id, cluster_id, _new) schema is
-      // guaranteed by the r17+ writer): precedence is derived from the
-      // source file's generation directory, so a K-delta chain costs one
-      // listing + one scan node instead of K reads unioned. Legacy
-      // chains (parent-pointer walk) keep the per-generation reads and
-      // the schema checks below.
-      val deltaFrames =
-        if (chain.fromSidecar) {
-          val dirs = chain.gens.init.map(g => new org.apache.hadoop.fs.Path(dir, g).toString)
-          val one = spark.read.parquet(dirs: _*)
-          val genOf = chain.gens.init.zipWithIndex
-            .map { case (g, i) => (g, n - i) }
-            .foldLeft(lit(null).cast("int")) { case (acc, (g, v)) =>
-              when(input_file_name().contains(s"/$g/"), lit(v)).otherwise(acc)
-            }
-          Seq(one.withColumn("_gen0", genOf))
-        } else chain.gens.init.map { g =>
-          spark.read.parquet(new org.apache.hadoop.fs.Path(dir, g).toString)
+      val precedence = chain.gens.init.zipWithIndex
+        .foldLeft(raise_error(concat(
+            lit(s"readClusterLabels: file outside the label chain of $dir: "),
+            input_file_name())).cast("int")) { case (acc, (g, i)) =>
+          when(input_file_name().contains(s"/$g/"), lit(n - i)).otherwise(acc)
         }
-      if (deltaFrames.forall(_.columns.contains("_new"))) {
-        // partition-local overlay (r15, r14 verdict "What's wrong #2"):
-        // newest-wins is resolved among the TOUCHED-rows deltas only
-        // (their union is O(touched × chain), never the corpus), then
-        // attached to the corpus-sized base with one left join whose
-        // build side is that small overlay — the base never shuffles,
-        // per read, at any corpus size. Ids born after the base carry
-        // the `_new` flag written at merge time, so they append WITHOUT
-        // an anti-join against the base (the previous overlay ran
-        // union → groupBy(id) → max_by across base + deltas: one
-        // full-corpus exchange per read, per caller — the wrong shape
-        // for a serving-side consumer reading between folds).
-        val overlay = deltaFrames.zipWithIndex.map { case (df, i) =>
-          val gen = if (df.columns.contains("_gen0")) col("_gen0") else lit(n - i)
-          df.select(col("id"), col("cluster_id"), gen.as("_gen"), col("_new"))
-        }.reduce(_ unionByName _)
-          .groupBy(col("id"))
-          .agg(max_by(col("cluster_id"), col("_gen")).as("_ov"),
-            max(col("_new")).as("_isnew"))
-        val base = spark.read.parquet(
-          new org.apache.hadoop.fs.Path(dir, chain.gens.last).toString)
-        // explicit byte-gated broadcast (r17, two-round verdict item):
-        // the delta bytes were recorded at write time, so the gate costs
-        // zero jobs and zero FS calls. Trusting AQE alone silently
-        // degrades to a corpus-shuffling sort-merge join the moment the
-        // overlay estimate crosses autoBroadcastJoinThreshold — the
-        // exact shape this overlay read exists to kill. Past the budget
-        // (a pathologically un-folded chain) the plain join is the
-        // documented fall-through: degraded to one base shuffle, still
-        // correct — compactClusterLabels is the remedy.
-        val attach = overlay.select(col("id"), col("_ov"))
-        val attachB =
-          if (chain.deltaBytes <= overlayBroadcastBudget(spark)) broadcast(attach)
-          else attach
-        base.join(attachB, Seq("id"), "left")
-          .select(col("id"), coalesce(col("_ov"), col("cluster_id")).as("cluster_id"))
-          .unionByName(overlay.filter(col("_isnew"))
-            .select(col("id"), col("_ov").as("cluster_id")))
-      } else {
-        // legacy chain (deltas written before the `_new` flag existed):
-        // the corpus-wide newest-wins aggregate is the only correct read.
-        // (A sidecar-resolved single-read delta frame carries _gen0; the
-        // base, appended last, overlays at precedence 1 as before.)
-        (deltaFrames :+ spark.read.parquet(
-            new org.apache.hadoop.fs.Path(dir, chain.gens.last).toString))
-          .zipWithIndex.map { case (df, i) =>
-            val gen =
-              if (df.columns.contains("_gen0")) col("_gen0")
-              else if (i == deltaFrames.length) lit(1) // the base
-              else lit(n - i)
-            df.select(col("id"), col("cluster_id"), gen.as("_gen"))
-          }.reduce(_ unionByName _)
-          .groupBy(col("id"))
-          .agg(max_by(col("cluster_id"), col("_gen")).as("cluster_id"))
-      }
+      // partition-local overlay (r15, r14 verdict "What's wrong #2"):
+      // newest-wins is resolved among the TOUCHED-rows deltas only
+      // (their union is O(touched × chain), never the corpus), then
+      // attached to the corpus-sized base with one left join whose
+      // build side is that small overlay — the base never shuffles,
+      // per read, at any corpus size. Ids born after the base carry
+      // the `_new` flag written at merge time, so they append WITHOUT
+      // an anti-join against the base.
+      val overlay = spark.read.parquet(chain.gens.init.map(genPath): _*)
+        .select(col("id"), col("cluster_id"), precedence.as("_gen"), col("_new"))
+        .groupBy(col("id"))
+        .agg(max_by(col("cluster_id"), col("_gen")).as("_ov"),
+          max(col("_new")).as("_isnew"))
+      val base = spark.read.parquet(genPath(chain.gens.last))
+      // explicit byte-gated broadcast (r17, two-round verdict item):
+      // the delta bytes were recorded at write time, so the gate costs
+      // zero jobs and zero FS calls. Trusting AQE alone silently
+      // degrades to a corpus-shuffling sort-merge join the moment the
+      // overlay estimate crosses autoBroadcastJoinThreshold — the
+      // exact shape this overlay read exists to kill. Past the budget
+      // (a pathologically un-folded chain) the plain join is the
+      // documented fall-through: degraded to one base shuffle, still
+      // correct — compactClusterLabels is the remedy.
+      val attach = overlay.select(col("id"), col("_ov"))
+      val attachB =
+        if (chain.deltaBytes <= overlayBroadcastBudget(spark)) broadcast(attach)
+        else attach
+      base.join(attachB, Seq("id"), "left")
+        .select(col("id"), coalesce(col("_ov"), col("cluster_id")).as("cluster_id"))
+        .unionByName(overlay.filter(col("_isnew"))
+          .select(col("id"), col("_ov").as("cluster_id")))
     }
   }
 
@@ -1288,16 +1224,18 @@ object Dedup {
     * longer depends on it).
     *
     * `delta = true` (r14): write only the CHANGED rows
-    * ([[updateClusterLabelsDelta]]) as a delta generation carrying a
-    * parent pointer — per-merge write cost drops from O(corpus) to
-    * O(touched), the high-frequency-cadence shape; readers overlay the
-    * chain (newest wins). When the chain would exceed `maxChain`, the
-    * merge writes a full base instead, folding the chain — amortized
-    * write cost O(corpus / maxChain) per merge with read fan-in bounded
-    * by `maxChain`. [[compactClusterLabels]] folds explicitly.
+    * ([[updateClusterLabelsDelta]]) as a delta generation whose chain
+    * sidecar names its ancestry — per-merge write cost drops from
+    * O(corpus) to O(touched), the high-frequency-cadence shape; readers
+    * overlay the chain (newest wins). When the chain would exceed
+    * `maxChain`, the merge writes a full base instead, folding the chain
+    * — amortized write cost O(corpus / maxChain) per merge with read
+    * fan-in bounded by `maxChain`. [[compactClusterLabels]] folds
+    * explicitly.
     *
-    * Mutator op: the index planes' single-mutator contract applies.
-    * Returns the new live path. */
+    * Mutator op: the index planes' single-mutator contract applies, and
+    * the generation publish enforces it — a concurrent append or delete
+    * aborts the merge before the swap. Returns the new live path. */
   def mergeClusterLabels(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
@@ -1339,18 +1277,11 @@ object Dedup {
         out.write.parquet(gen)
         val genName = new org.apache.hadoop.fs.Path(gen).getName
         val myLine = s"$genName\t${genDataBytes(spark, gen)}"
-        if (writeDelta) {
-          IndexMaintenance.writeParamsSidecar(spark, gen, LabelParentFile, chain.head)
-          // one-read chain resolution (r17): the new generation carries
-          // the FULL chain (itself + its ancestry) with per-generation
-          // data bytes, so readers resolve in O(1) FS calls and the
-          // overlay broadcast gate is free
-          IndexMaintenance.writeParamsSidecar(spark, gen, LabelChainFile,
-            (myLine +: chain.lines).mkString("\n"))
-        } else {
-          // full base: the chain is just itself
-          IndexMaintenance.writeParamsSidecar(spark, gen, LabelChainFile, myLine)
-        }
+        // one-read chain resolution (r17): a delta generation carries
+        // the FULL chain (itself + its ancestry) with per-generation
+        // data bytes; a full base's chain is just itself
+        val lines = if (writeDelta) myLine +: chain.lines else Seq(myLine)
+        IndexMaintenance.writeParamsSidecar(spark, gen, LabelChainFile, lines.mkString("\n"))
       }
     }
   }
@@ -1511,32 +1442,14 @@ object Dedup {
       .drop("_b")
   }
 
-  private val MinhashParamsFile = "_graft_minhash_params"
+  /** The MinHash index layout: banded signature rows partitioned by
+    * `band_idx`, guarded by the hash-family parameter sidecar —
+    * signatures are not comparable across parameter sets. */
+  private val MinhashLayout =
+    IndexMaintenance.Layout("band_idx", "_graft_minhash_params", "MinHash parameters")
 
   private def minhashParams(numHashes: Int, rowsPerBand: Int, shingleN: Int): String =
     s"numHashes=$numHashes rowsPerBand=$rowsPerBand shingleN=$shingleN"
-
-  private def writeSidecar(df: DataFrame, dir: String, content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, MinhashParamsFile)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def requireSidecarMatch(df: DataFrame, dir: String, expected: String,
-      api: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, MinhashParamsFile)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val stored = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      require(stored == expected,
-        s"$api: index at $dir was built under different MinHash parameters " +
-          s"(stored '$stored', supplied '$expected') — signatures are not " +
-          "comparable across parameter sets; rebuild with writeMinhashIndex")
-    }
-  }
 
   /** Materialize the banded MinHash signature index ONCE as a parquet
     * layout partitioned by `band_idx` — the build-once/probe-many form
@@ -1556,17 +1469,13 @@ object Dedup {
       rowsPerBand: Int = 2,
       shingleN: Int = 2): Unit = {
     require(numHashes % rowsPerBand == 0, "numHashes must be divisible by rowsPerBand")
-    def writeTo(target: String): Unit = {
-      minhashIndexRows(docs, textCol, idCol, "ref_id", numHashes, rowsPerBand, shingleN)
-        .write.mode("overwrite").partitionBy("band_idx").parquet(target)
-      writeSidecar(docs, target, minhashParams(numHashes, rowsPerBand, shingleN))
-    }
     // manifest-aware (r12): rebuild-as-new-generation with a zero-gap
     // pointer swap — a dedupServe stream picks up the new reference set
     // on its next micro-batch (ManifestSwapSpec)
-    if (IndexMaintenance.hasManifest(docs.sparkSession, dir))
-      IndexMaintenance.rebuild(docs.sparkSession, dir)(writeTo)
-    else writeTo(dir)
+    IndexMaintenance.writeIndex(docs.sparkSession, dir, MinhashLayout,
+        minhashParams(numHashes, rowsPerBand, shingleN)) {
+      minhashIndexRows(docs, textCol, idCol, "ref_id", numHashes, rowsPerBand, shingleN)
+    }
   }
 
   /** Incremental maintenance: append new (already-deduplicated) docs'
@@ -1583,11 +1492,10 @@ object Dedup {
       shingleN: Int = 2): Unit = {
     // manifest-aware (r12): appends land in the LIVE generation, so a
     // manifest-pointer index keeps its append lifecycle unchanged
-    val live = IndexMaintenance.resolveLive(newDocs.sparkSession, dir)
-    requireSidecarMatch(newDocs, live, minhashParams(numHashes, rowsPerBand, shingleN),
-      "appendMinhashIndex")
-    minhashIndexRows(newDocs, textCol, idCol, "ref_id", numHashes, rowsPerBand, shingleN)
-      .write.mode("append").partitionBy("band_idx").parquet(live)
+    IndexMaintenance.appendIndex(newDocs.sparkSession, dir, MinhashLayout,
+        minhashParams(numHashes, rowsPerBand, shingleN), "appendMinhashIndex") {
+      minhashIndexRows(newDocs, textCol, idCol, "ref_id", numHashes, rowsPerBand, shingleN)
+    }
   }
 
   /** One-file-per-band compaction of a [[writeMinhashIndex]] layout
@@ -1597,7 +1505,8 @@ object Dedup {
     * ([[IndexMaintenance.compact]] for the mechanics). */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       swap: Boolean = true): String =
-    IndexMaintenance.compact(spark, dir, "band_idx", swap, tombstoneIdCol = Some("ref_id"))
+    IndexMaintenance.compact(spark, dir, MinhashLayout.partitionCol, swap,
+      tombstoneIdCol = Some("ref_id"))
 
   /** DELETE reference docs from a [[writeMinhashIndex]] layout —
     * tombstoned immediately ([[IndexMaintenance.tombstone]]: O(|ids|)
@@ -1641,11 +1550,8 @@ object Dedup {
     // compaction swap is picked up by the NEXT probe (or micro-batch)
     // atomically — the live path is never absent mid-swap. Tombstones
     // stay at the ROOT: they are pending deletes, generation-independent
-    val live = IndexMaintenance.resolveLive(incoming.sparkSession, dir)
-    requireSidecarMatch(incoming, live, minhashParams(numHashes, rowsPerBand, shingleN),
-      "dedupAgainstMinhashIndex")
-    val idx = IndexMaintenance.filterTombstoned(incoming.sparkSession, dir,
-      incoming.sparkSession.read.parquet(live), "ref_id")
+    val idx = IndexMaintenance.readIndex(incoming.sparkSession, dir, MinhashLayout,
+      minhashParams(numHashes, rowsPerBand, shingleN), "dedupAgainstMinhashIndex", "ref_id")
     val inRows0 = minhashIndexRows(
         incoming, textCol, idCol, "new_id", numHashes, rowsPerBand, shingleN)
       .select(col("new_id") +: col("band_idx") +: col("band") +:

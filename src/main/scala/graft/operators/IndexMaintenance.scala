@@ -1,47 +1,60 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Maintenance for the persisted on-disk index layouts (IVF-PQ code
-  * partitions, MinHash banded signatures): their append lifecycles
-  * (`Similarity.appendIvfPqIndex`, `Dedup.appendMinhashIndex`) add one
-  * parquet file per touched partition per append, so a high-frequency
-  * ingest cadence accumulates small files and the probe cost becomes
-  * file-OPEN-bound long before it is byte-bound — the standard warehouse
-  * small-file story.
+/** The one lifecycle of every persisted on-disk index layout — IVF-PQ
+  * code partitions (`Similarity`), MinHash banded signatures (`Dedup`),
+  * image/audio fingerprint bands (`Multimodal`) and cluster-label chains
+  * (`Dedup.mergeClusterLabels`). This object is the only code that knows
+  * the persisted format; a layout declares its schema, its partition
+  * column and its parameter string ([[Layout]]) and nothing else.
   *
-  * [[compact]] rewrites such a layout to one file per partition value
-  * WITHOUT changing a single row: read, hash-repartition ON the partition
-  * column (every value's rows land in exactly one task, so each
-  * partition directory gets exactly one output file), rewrite into a
-  * staging directory, carry the `_graft_*` model/parameter sidecars
-  * byte-verbatim, then swap via two renames. Because index rows are
-  * independent (no global statistics, no ordering — the property that
-  * already makes append ≡ rebuild), compaction ≡ identity on every probe
-  * result; MinhashIndexSpec and IvfPqMaintSpec pin probe-before ==
-  * probe-after bit-exactly.
+  * Format: a partitioned parquet tree plus one-line `_graft_*` sidecar
+  * files (parameters, model fingerprints, label chains). A layout is
+  * either FLAT (the tree at `dir`) or MANIFEST (`<dir>/_graft_manifest`
+  * names the live generation `<dir>/_graft_gen_NNNNN`; see
+  * [[enableManifest]]). Pending deletes live at `<dir>/_graft_tombstones`
+  * in both.
   *
-  * Crash window: between the two renames the live path is briefly
-  * absent; a crash there leaves the complete OLD index at
-  * `<dir>__precompact` for manual recovery, and the staging dir is only
-  * renamed in AFTER a fully successful write. On object stores without
+  * Operations, each written once:
+  *  - sidecars: [[writeParamsSidecar]], [[readParamsSidecar]],
+  *    [[requireParamsMatch]] — every read goes through [[readSmall]]
+  *    (bounded checksum retry, counted in [[controlReads]]);
+  *  - build/append/probe: [[writeIndex]] (in place on a flat layout, a
+  *    published generation on a manifest layout), [[appendIndex]] (into
+  *    the live tree), [[readIndex]] (live tree minus tombstones);
+  *  - delete: [[tombstone]], honored by [[filterTombstoned]];
+  *  - compaction: [[compact]] — one rewrite (read, drop tombstoned rows,
+  *    hash-repartition ON the partition column so each value lands in
+  *    one task and one file, partitioned write, sidecars carried
+  *    byte-verbatim) into a staging dir swapped in by two renames (flat)
+  *    or into a new generation (manifest). Index rows are independent
+  *    (no global statistics, no ordering — the property that makes
+  *    append ≡ rebuild), so compaction ≡ identity on every probe result;
+  *  - generation publish: [[rebuild]] and manifest [[compact]] share one
+  *    routine — allocate the next generation, write it, check for drift,
+  *    repoint the manifest atomically, clear tombstones, reap.
+  *
+  * Flat-swap crash window: between the two renames the live path is
+  * briefly absent; a crash there leaves the complete OLD index at
+  * `<dir>__precompact` for manual recovery. On object stores without
   * atomic rename, run with `swap = false` and repoint serving at the
   * returned staging path instead (the blue/green form).
   *
-  * SINGLE MUTATOR (r12, contract): exactly one writer — append,
-  * tombstone, or compact — may mutate an index at a time. Concurrent
-  * READS are safe throughout (and with an [[enableManifest]] pointer
-  * layout, safe even across a compaction swap), but a row appended to the live
-  * dir AFTER compact's staging read and BEFORE its swap is silently
-  * lost (moved to `__precompact`, then deleted), and a tombstone
-  * written in that window is wrongly cleared as if materialized.
-  * [[compact]] enforces the append half of this loudly: it re-lists the
-  * live dir before swapping and aborts if any data file is newer than
-  * its staging snapshot. Serialize mutators externally (an ingest lock,
-  * a single owner job) — the same rule every log-structured index
-  * (LSM, Lucene, Iceberg without a catalog) imposes. */
+  * SINGLE MUTATOR (contract): exactly one writer — append, tombstone,
+  * compact, rebuild or label merge — may mutate an index at a time.
+  * Concurrent READS are safe throughout (and with a manifest layout,
+  * safe even across a swap). Every compaction and every generation
+  * publish enforces the contract loudly: it snapshots what a concurrent
+  * mutator could touch (the live tree and the tombstone set), re-lists
+  * it before the swap, and aborts with "concurrent mutation" if anything
+  * changed — otherwise a racing append would vanish with the superseded
+  * tree and a racing tombstone would be cleared as if materialized.
+  * Serialize mutators externally (an ingest lock, a single owner job) —
+  * the rule every log-structured index (LSM, Lucene, Iceberg without a
+  * catalog) imposes. */
 object IndexMaintenance {
 
   private val TombstoneDir = "_graft_tombstones"
@@ -84,7 +97,7 @@ object IndexMaintenance {
     * Unknown schemes get a one-time stderr warning (fail-open: a
     * denylist can't enumerate every HDFS-compatible FS). */
   private[graft] def requireAtomicRename(
-      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem, api: String): Unit = {
+      spark: SparkSession, fs: FileSystem, api: String): Unit = {
     val scheme = Option(fs.getUri.getScheme).getOrElse("file").toLowerCase
     if (NonAtomicRenameSchemes.contains(scheme)) {
       if (!spark.conf.getOption(AssumeAtomicRenameConf).exists(_.trim.equalsIgnoreCase("true")))
@@ -190,7 +203,7 @@ object IndexMaintenance {
     * HDFS keeps checksums server-side and has no such window; locally
     * the pair settles within the writer's next instruction, so a short
     * bounded retry restores the "old or new, never torn" contract. */
-  private def readSmall(fs: org.apache.hadoop.fs.FileSystem, p: Path): String = {
+  private def readSmall(fs: FileSystem, p: Path): String = {
     controlReads.incrementAndGet()
     var attempt = 0
     while (true) {
@@ -207,6 +220,8 @@ object IndexMaintenance {
     }
     throw new IllegalStateException("unreachable")
   }
+
+  // ------------------------------------------------- sidecars
 
   /** Write a one-line parameter sidecar `<dir>/<name>` (the
     * `_graft_*` convention: leading underscore, carried verbatim by
@@ -229,59 +244,119 @@ object IndexMaintenance {
 
   /** Throws when `dir` carries sidecar `name` with content other than
     * `expected` — the shared guard that keeps probe/append parameters
-    * consistent with the build's. Absent sidecar passes unchecked
-    * (pre-sidecar or externally-written indexes). */
+    * consistent with the build's. `what` names the parameters in the
+    * error ("model", "MinHash parameters"). Absent sidecar passes
+    * unchecked (externally-written indexes). */
   def requireParamsMatch(
-      spark: SparkSession, dir: String, name: String, expected: String, api: String): Unit = {
-    val p = new Path(dir, name)
-    val fs = fileSystem(spark, dir)
-    if (fs.exists(p)) {
-      val stored = readSmall(fs, p)
+      spark: SparkSession, dir: String, name: String, expected: String, api: String,
+      what: String): Unit =
+    readParamsSidecar(spark, dir, name).foreach { stored =>
       require(stored == expected,
-        s"$api: index at $dir was built under different parameters " +
+        s"$api: index at $dir was built under different $what " +
           s"(stored '$stored', supplied '$expected') — rebuild the index")
     }
+
+  // ------------------------------------------------- build / append / probe
+
+  /** What a persisted layout declares about itself: the column its
+    * parquet tree is partitioned by, its parameter sidecar's name, and
+    * the noun a parameter mismatch names ([[requireParamsMatch]]). */
+  final case class Layout(partitionCol: String, sidecar: String, what: String)
+
+  /** Write a complete index of `rows` under `params`: in place on a flat
+    * layout, or — on a manifest layout — as a freshly published
+    * generation ([[rebuild]]) with zero serving gap. */
+  def writeIndex(spark: SparkSession, dir: String, layout: Layout, params: String)(
+      rows: => DataFrame): Unit = {
+    def writeTo(target: String): Unit = {
+      rows.write.mode("overwrite").partitionBy(layout.partitionCol).parquet(target)
+      writeParamsSidecar(spark, target, layout.sidecar, params)
+    }
+    if (hasManifest(spark, dir)) rebuild(spark, dir)(writeTo) else writeTo(dir)
   }
 
-  /** Zero-gap REBUILD on a manifest layout (r12): `writeGen` writes a
-    * complete fresh index (data + sidecars) into the returned staging
-    * generation path; when it finishes, the manifest atomically repoints
-    * and older generations (except the superseded one, retained for
-    * in-flight readers) are reaped. Serving probes resolve per call, so
-    * a rebuild — retrained codebooks via
-    * `Similarity.pqCodebooksTrained`, a re-sharded corpus, new MinHash
-    * reference set — lands between micro-batches with zero restart and
-    * zero absent-path window, exactly like [[compact]]'s swap. Pending
-    * tombstones are CLEARED, not carried: a rebuild defines the new
-    * reference population outright (exclude deleted content from the
-    * rebuild input). Mutator op — single-mutator contract applies.
-    * Returns the new live generation's path. */
+  /** Append `rows` into the live tree (the live generation on a manifest
+    * layout) after checking `params` against the build's sidecar. Rows
+    * are independent, so append ≡ rebuild. `rows` is built only after
+    * the check passes. */
+  def appendIndex(spark: SparkSession, dir: String, layout: Layout, params: String,
+      api: String)(rows: => DataFrame): Unit = {
+    val live = checkedLive(spark, dir, layout, params, api)
+    rows.write.mode("append").partitionBy(layout.partitionCol).parquet(live)
+  }
+
+  /** The probe-side read: the live tree, resolved per call (a swap is
+    * picked up by the next probe or micro-batch), checked against
+    * `params`, minus tombstoned `idCol`s. */
+  def readIndex(spark: SparkSession, dir: String, layout: Layout, params: String,
+      api: String, idCol: String): DataFrame =
+    filterTombstoned(spark, dir,
+      spark.read.parquet(checkedLive(spark, dir, layout, params, api)), idCol)
+
+  /** The live tree of `dir`, after its sidecar matched `params`. */
+  private def checkedLive(
+      spark: SparkSession, dir: String, layout: Layout, params: String, api: String): String = {
+    val live = resolveLive(spark, dir)
+    requireParamsMatch(spark, live, layout.sidecar, params, api, layout.what)
+    live
+  }
+
+  // ------------------------------------------------- generation publish
+
+  /** Zero-gap REBUILD on a manifest layout: `writeGen` writes a complete
+    * fresh index (data + sidecars) into the given generation path; the
+    * generation is then published ([[publishGeneration]]). Serving
+    * probes resolve per call, so a rebuild — retrained codebooks via
+    * `Similarity.pqCodebooksTrained`, a re-sharded corpus, a new MinHash
+    * reference set, a label merge — lands between micro-batches with
+    * zero restart. Pending tombstones are CLEARED, not carried: a rebuild
+    * defines the new reference population outright (exclude deleted
+    * content from the rebuild input). `alsoKeep` names generations a
+    * layered layout still depends on (the label planes' delta chains);
+    * they survive the reap. Mutator op — a concurrent append or
+    * tombstone aborts the rebuild before the swap. Returns the new live
+    * generation's path. */
   def rebuild(spark: SparkSession, dir: String, alsoKeep: Set[String] = Set.empty)(
       writeGen: String => Unit): String = {
-    val fs = fileSystem(spark, dir)
-    val root = fs.makeQualified(new Path(dir))
-    require(fs.exists(new Path(root, ManifestFile)),
+    require(hasManifest(spark, dir),
       s"rebuild: $dir is not a manifest layout — run enableManifest first " +
         "(a flat layout rebuilds with the plain overwrite write)")
-    val liveGenName = readSmall(fs, new Path(root, ManifestFile))
+    publishGeneration(spark, dir, "rebuild", alsoKeep)((_, next) => writeGen(next.toString))
+  }
+
+  /** The one generation publish behind [[rebuild]] and manifest
+    * [[compact]]: allocate `_graft_gen_<N+1>`, let `writeGen(liveGen,
+    * next)` fill it, abort if a concurrent mutator touched the live
+    * generation or the tombstone set meanwhile (single-mutator guard),
+    * atomically repoint the manifest, clear the tombstones, and reap
+    * every generation except the new one, the superseded one (retained
+    * for in-flight readers, removed by the next publish) and `alsoKeep`. */
+  private def publishGeneration(
+      spark: SparkSession, dir: String, api: String, alsoKeep: Set[String])(
+      writeGen: (Path, Path) => Unit): String = {
+    val fs = fileSystem(spark, dir)
+    val root = fs.makeQualified(new Path(dir))
+    val liveGen = new Path(root, readSmall(fs, new Path(root, ManifestFile)))
     val nextN = fs.listStatus(root).map(_.getPath.getName)
       .filter(_.startsWith(GenPrefix))
       .map(_.stripPrefix(GenPrefix).toInt).max + 1
     val next = new Path(root, f"$GenPrefix$nextN%05d")
     fs.delete(next, true)
-    writeGen(next.toString)
+    // appends land in the live generation, tombstones at the root
+    val snapshot = mutationScope(fs, root, liveGen)
+    writeGen(liveGen, next)
+    requireNoDrift(api, dir, "the manifest swap", snapshot, mutationScope(fs, root, liveGen))
     writeManifest(spark, root, next.getName)
     fs.delete(new Path(root, TombstoneDir), true)
-    // `alsoKeep` (r14): generations a layered layout still depends on —
-    // the label planes' delta chains — survive the reap alongside the
-    // superseded live generation
     fs.listStatus(root).map(_.getPath)
       .filter(p => p.getName.startsWith(GenPrefix) &&
-        p.getName != next.getName && p.getName != liveGenName &&
+        p.getName != next.getName && p.getName != liveGen.getName &&
         !alsoKeep.contains(p.getName))
       .foreach(p => fs.delete(p, true))
     next.toString
   }
+
+  // ------------------------------------------------- tombstones
 
   /** DELETE from a persisted index, tombstone-style: the ids are
     * appended to a slim parquet set under `<dir>/_graft_tombstones`
@@ -327,13 +402,81 @@ object IndexMaintenance {
   private def fileSystem(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  // ------------------------------------------------- compaction
+
+  /** Compacts the partitioned parquet index at `dir` to one file per
+    * `partitionCol` value, materializing any pending [[tombstone]]s
+    * (rows dropped physically, the tombstone set cleared — pass
+    * `tombstoneIdCol` so the anti-join knows the id column). Returns the
+    * path now holding the compacted layout: `dir` itself when `swap`
+    * (default), else the staging dir.
+    *
+    * On a manifest layout ([[enableManifest]]) the rewrite lands in a
+    * NEW generation published by the manifest swap instead — the live
+    * path is never absent, so serving probes (including mid-stream
+    * `annServe`/`dedupServe` micro-batches) are safe across it; `swap`
+    * is ignored (the manifest IS the blue/green pointer). Returns the
+    * new generation's path. */
+  def compact(
+      spark: SparkSession,
+      dir: String,
+      partitionCol: String,
+      swap: Boolean = true,
+      tombstoneIdCol: Option[String] = None): String = {
+    val live = new Path(dir)
+    val fs = fileSystem(spark, dir)
+    require(fs.exists(live), s"compact: no index at $dir")
+    // fail BEFORE the staging rewrite: an in-place swap on a
+    // non-atomic-rename store is the documented swap=false case
+    if (swap) requireAtomicRename(spark, fs, "compact")
+    def rewrite(src: Path, dst: Path): Unit =
+      rewriteCompacted(spark, dir, src, dst, partitionCol, tombstoneIdCol)
+    if (fs.exists(new Path(live, ManifestFile)))
+      return publishGeneration(spark, dir, "compact", Set.empty)(rewrite)
+    val staging = new Path(dir + "__compacting")
+    val backup = new Path(dir + "__precompact")
+    fs.delete(staging, true)
+    fs.delete(backup, true)
+    // the flat tree holds both the data (appends) and the tombstone set
+    val snapshot = listTree(fs, live)
+    rewrite(live, staging)
+    if (!swap) return staging.toString
+    requireNoDrift("compact", dir, "the swap", snapshot, listTree(fs, live))
+    require(fs.rename(live, backup), s"compact: could not stage-out $dir")
+    require(fs.rename(staging, live), s"compact: could not swap in ${staging.getName}")
+    fs.delete(backup, true)
+    dir
+  }
+
+  /** The one compaction rewrite: `src`'s rows minus `dir`'s pending
+    * tombstones, hash-repartitioned ON `partitionCol` (every value's rows
+    * land in exactly one task, so each partition directory gets exactly
+    * one file), written partitioned to `dst`; then the `_graft_*`
+    * sidecar FILES are carried byte-verbatim — the compacted index is
+    * the SAME index, so append/probe guards keep matching. The
+    * tombstone DIRECTORY is deliberately not carried: its deletes were
+    * just materialized. */
+  private def rewriteCompacted(
+      spark: SparkSession, dir: String, src: Path, dst: Path,
+      partitionCol: String, tombstoneIdCol: Option[String]): Unit = {
+    val rows = spark.read.parquet(src.toString)
+    tombstoneIdCol.fold(rows)(filterTombstoned(spark, dir, rows, _))
+      .repartition(col(partitionCol))
+      .write.partitionBy(partitionCol).parquet(dst.toString)
+    val fs = fileSystem(spark, dir)
+    fs.listStatus(src)
+      .filter(st => st.isFile && st.getPath.getName.startsWith("_graft_"))
+      .foreach(st => FileUtil.copy(fs, st.getPath, fs, new Path(dst, st.getPath.getName),
+        false, true, spark.sparkContext.hadoopConfiguration))
+  }
+
+  // ------------------------------------------------- single-mutator guard
+
   /** Recursive (path, length, modtime) listing of every FILE under
-    * `root` — the drift fingerprint for [[compact]]'s single-mutator
-    * guard. A concurrent append adds part files (and rewrites
-    * `_SUCCESS`), a concurrent tombstone adds files under
+    * `root` — the drift fingerprint. A concurrent append adds part files
+    * (and rewrites `_SUCCESS`), a concurrent tombstone adds files under
     * `_graft_tombstones` — all visible as set difference. */
-  private def listTree(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path): Seq[(String, Long, Long)] = {
+  private def listTree(fs: FileSystem, root: Path): Seq[(String, Long, Long)] = {
     val it = fs.listFiles(root, true)
     val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
     while (it.hasNext) {
@@ -343,150 +486,23 @@ object IndexMaintenance {
     buf.toSeq
   }
 
-  /** Compacts the partitioned parquet index at `dir` to one file per
-    * `partitionCol` value, materializing any pending [[tombstone]]s
-    * (rows dropped physically, the tombstone set cleared — pass
-    * `tombstoneIdCol` so the anti-join knows the id column). Returns the
-    * path now holding the compacted layout: `dir` itself when `swap`
-    * (default), else the staging dir.
-    *
-    * On a manifest-pointer layout ([[enableManifest]]) this routes to
-    * the generation swap instead: the compacted rows land in a NEW
-    * generation dir, the one-line manifest is atomically repointed, and
-    * the live path is never absent — serving probes (including
-    * mid-stream `annServe`/`dedupServe` micro-batches) are safe across
-    * the swap; `swap` is ignored (the manifest IS the blue/green
-    * pointer). Returns the new generation's path. */
-  def compact(
-      spark: SparkSession,
-      dir: String,
-      partitionCol: String,
-      swap: Boolean = true,
-      tombstoneIdCol: Option[String] = None): String = {
-    val live = new Path(dir)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(live), s"compact: no index at $dir")
-    // fail BEFORE the staging rewrite: an in-place swap on a
-    // non-atomic-rename store is the documented swap=false case
-    if (swap) requireAtomicRename(spark, fs, "compact")
-    if (fs.exists(new Path(live, ManifestFile)))
-      return compactGeneration(spark, dir, partitionCol, tombstoneIdCol)
-    val staging = new Path(dir + "__compacting")
-    val backup = new Path(dir + "__precompact")
-    fs.delete(staging, true)
-    fs.delete(backup, true)
-
-    // single-mutator guard (r12): snapshot the live tree now; re-list
-    // just before the swap and abort loudly if anything changed, so an
-    // append/tombstone racing this compaction fails the compaction
-    // instead of vanishing into __precompact
-    val snapshot = listTree(fs, live)
-
-    val rows = spark.read.parquet(dir)
-    val liveRows = tombstoneIdCol match {
-      case Some(idc) => filterTombstoned(spark, dir, rows, idc)
-      case None => rows
-    }
-    liveRows
-      .repartition(col(partitionCol))
-      .write.partitionBy(partitionCol).parquet(staging.toString)
-
-    // carry the model/parameter sidecars byte-verbatim — the compacted
-    // index is the SAME index, so append/probe guards must keep
-    // matching. FILES only: the tombstone DIRECTORY is deliberately not
-    // carried — its deletes were just materialized into the rewrite
-    fs.listStatus(live).map(_.getPath)
-      .filter(p => p.getName.startsWith("_graft_") && fs.getFileStatus(p).isFile)
-      .foreach { p =>
-        val in = fs.open(p)
-        val bytes =
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-            buf.toByteArray
-          } finally in.close()
-        val out = fs.create(new Path(staging, p.getName), true)
-        try out.write(bytes) finally out.close()
-      }
-
-    if (!swap) return staging.toString
-    val drift = listTree(fs, live).toSet.diff(snapshot.toSet)
-    require(drift.isEmpty,
-      s"compact: concurrent mutation of $dir detected (single-mutator " +
-        s"contract) — aborting before the swap; changed: " +
-        drift.take(5).map(_._1).mkString(", "))
-    require(fs.rename(live, backup), s"compact: could not stage-out $dir")
-    require(fs.rename(staging, live), s"compact: could not swap in ${staging.getName}")
-    fs.delete(backup, true)
-    dir
-  }
-
-  /** [[compact]] on a manifest-pointer layout: write generation N+1,
-    * atomically repoint the manifest, clear materialized tombstones,
-    * delete generations older than the one just superseded (that one is
-    * retained for in-flight readers and removed by the NEXT compaction). */
-  private def compactGeneration(
-      spark: SparkSession,
-      dir: String,
-      partitionCol: String,
-      tombstoneIdCol: Option[String]): String = {
-    val fs = fileSystem(spark, dir)
-    val root = fs.makeQualified(new Path(dir))
-    val liveGenName = readSmall(fs, new Path(root, ManifestFile))
-    val liveGen = new Path(root, liveGenName)
-    val nextN = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith(GenPrefix))
-      .map(_.stripPrefix(GenPrefix).toInt).max + 1
-    val next = new Path(root, f"$GenPrefix$nextN%05d")
-    fs.delete(next, true)
-
-    // single-mutator guard: appends land in the live generation,
-    // tombstones at the root — snapshot both, re-check before publish
-    val snapshot = mutationScope(fs, root, liveGen)
-
-    val rows = spark.read.parquet(liveGen.toString)
-    val liveRows = tombstoneIdCol match {
-      case Some(idc) => filterTombstoned(spark, dir, rows, idc)
-      case None => rows
-    }
-    liveRows
-      .repartition(col(partitionCol))
-      .write.partitionBy(partitionCol).parquet(next.toString)
-    fs.listStatus(liveGen).map(_.getPath)
-      .filter(p => p.getName.startsWith("_graft_") && fs.getFileStatus(p).isFile)
-      .foreach { p =>
-        val bytes = {
-          val in = fs.open(p)
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-            buf.toByteArray
-          } finally in.close()
-        }
-        val out = fs.create(new Path(next, p.getName), true)
-        try out.write(bytes) finally out.close()
-      }
-
-    val drift = mutationScope(fs, root, liveGen).toSet.diff(snapshot.toSet)
-    require(drift.isEmpty,
-      s"compact: concurrent mutation of $dir detected (single-mutator " +
-        s"contract) — aborting before the manifest swap; changed: " +
-        drift.take(5).map(_._1).mkString(", "))
-    writeManifest(spark, root, next.getName)
-    fs.delete(new Path(root, TombstoneDir), true) // materialized above
-    fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith(GenPrefix) &&
-        p.getName != next.getName && p.getName != liveGen.getName)
-      .foreach(p => fs.delete(p, true))
-    next.toString
-  }
-
-  /** Everything a concurrent mutator could touch while a generation
-    * compaction runs: the live generation's tree (appends) plus the
-    * root tombstone set (deletes). */
+  /** Everything a concurrent mutator could touch while a generation is
+    * written: the live generation's tree (appends) plus the root
+    * tombstone set (deletes). */
   private def mutationScope(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path, liveGen: Path): Seq[(String, Long, Long)] = {
+      fs: FileSystem, root: Path, liveGen: Path): Seq[(String, Long, Long)] = {
     val t = new Path(root, TombstoneDir)
     listTree(fs, liveGen) ++ (if (fs.exists(t)) listTree(fs, t) else Nil)
+  }
+
+  /** Abort `api` before `step` when the mutation scope changed since
+    * `before` (single-mutator contract). */
+  private def requireNoDrift(api: String, dir: String, step: String,
+      before: Seq[(String, Long, Long)], after: Seq[(String, Long, Long)]): Unit = {
+    val drift = after.toSet.diff(before.toSet)
+    require(drift.isEmpty,
+      s"$api: concurrent mutation of $dir detected (single-mutator " +
+        s"contract) — aborting before $step; changed: " +
+        drift.take(5).map(_._1).mkString(", "))
   }
 }

@@ -349,7 +349,9 @@ object Multimodal {
 
   // --------------------------------------------- persisted fingerprint index
 
-  private val FpParamsFile = "_graft_fp_params"
+  /** The fingerprint index layout: banded rows partitioned by
+    * `band_idx`, guarded by the fingerprint-family parameter sidecar. */
+  private val FpLayout = IndexMaintenance.Layout("band_idx", "_graft_fp_params", "parameters")
   private def fpParams(kind: String): String = s"kind=$kind bands=5 bits=13"
 
   /** Materialize a perceptual-fingerprint index ONCE as a parquet layout
@@ -404,7 +406,8 @@ object Multimodal {
     * materialized. */
   def compactFpIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       swap: Boolean = true): String =
-    IndexMaintenance.compact(spark, dir, "band_idx", swap, tombstoneIdCol = Some("ref_id"))
+    IndexMaintenance.compact(spark, dir, FpLayout.partitionCol, swap,
+      tombstoneIdCol = Some("ref_id"))
 
   /** Near-dup dedup of an ingest batch AGAINST the persisted image
     * fingerprint index — the incremental twin of [[imageNearDup]] (which
@@ -458,37 +461,24 @@ object Multimodal {
   }
 
   private def writeFpIndex(docs: DataFrame, dir: String,
-      fp: org.apache.spark.sql.Column, kind: String, idCol: String): Unit = {
-    val spark = docs.sparkSession
-    def writeTo(target: String): Unit = {
+      fp: org.apache.spark.sql.Column, kind: String, idCol: String): Unit =
+    IndexMaintenance.writeIndex(docs.sparkSession, dir, FpLayout, fpParams(kind)) {
       fpIndexRows(docs, fp, idCol, "ref_id")
-        .write.mode("overwrite").partitionBy("band_idx").parquet(target)
-      IndexMaintenance.writeParamsSidecar(spark, target, FpParamsFile, fpParams(kind))
     }
-    if (IndexMaintenance.hasManifest(spark, dir))
-      IndexMaintenance.rebuild(spark, dir)(writeTo)
-    else writeTo(dir)
-  }
 
   private def appendFpIndex(newDocs: DataFrame, dir: String,
-      fp: org.apache.spark.sql.Column, kind: String, idCol: String): Unit = {
-    val spark = newDocs.sparkSession
-    val live = IndexMaintenance.resolveLive(spark, dir)
-    IndexMaintenance.requireParamsMatch(spark, live, FpParamsFile, fpParams(kind),
-      "appendFpIndex")
-    fpIndexRows(newDocs, fp, idCol, "ref_id")
-      .write.mode("append").partitionBy("band_idx").parquet(live)
-  }
+      fp: org.apache.spark.sql.Column, kind: String, idCol: String): Unit =
+    IndexMaintenance.appendIndex(newDocs.sparkSession, dir, FpLayout, fpParams(kind),
+        "appendFpIndex") {
+      fpIndexRows(newDocs, fp, idCol, "ref_id")
+    }
 
   private def probeFpIndex(
       incoming: DataFrame, dir: String, fp: org.apache.spark.sql.Column,
       kind: String, maxDist: Int, idCol: String, broadcastIncoming: Boolean): DataFrame = {
     val spark = incoming.sparkSession
-    val live = IndexMaintenance.resolveLive(spark, dir)
-    IndexMaintenance.requireParamsMatch(spark, live, FpParamsFile, fpParams(kind),
-      "dedupAgainstFpIndex")
-    val idx = IndexMaintenance.filterTombstoned(spark, dir,
-      spark.read.parquet(live), "ref_id")
+    val idx = IndexMaintenance.readIndex(spark, dir, FpLayout, fpParams(kind),
+      "dedupAgainstFpIndex", "ref_id")
     val inRows0 = fpIndexRows(incoming, fp, idCol, "new_id")
       .withColumnRenamed("fp", "nfp")
     val inRows = if (broadcastIncoming) broadcast(inRows0) else inRows0

@@ -382,10 +382,8 @@ object Similarity {
       idC: String = "cid",
       vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
-    val live = IndexMaintenance.resolveLive(spark, indexDir)
-    requireModelMatch(spark, live, centroidVecs, codebooks, "ivfRangeSearchIndexed")
-    val idx = IndexMaintenance.filterTombstoned(spark, indexDir,
-      spark.read.parquet(live), idC)
+    val idx = IndexMaintenance.readIndex(spark, indexDir, IvfPqLayout,
+      modelSig(centroidVecs, codebooks), "ivfRangeSearchIndexed", idC)
     val qAssigned = assignCells(
       queries.select(col(idQ), col(vecCol).as("_qv")), centroidVecs, "_qv", nProbe)
     val probedCells = qAssigned.select("centroid_id").distinct()
@@ -1220,26 +1218,26 @@ object Similarity {
       dir: String,
       idC: String = "cid",
       vecCol: String = "embedding"): Unit = {
-    val spark = candidates.sparkSession
-    def writeTo(target: String): Unit = {
-      encodeForIndex(candidates, centroidVecs, codebooks, idC, vecCol)
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(target)
-      writeModelSig(spark, target, centroidVecs, codebooks)
-    }
     // manifest-aware (r12): on a manifest layout a (re)build lands as a
     // fresh generation + atomic pointer swap — retrain-and-swap with
     // zero serving gap (new model picked up by the next probe that
     // passes the new model's arguments; a probe still holding the old
     // model fails LOUDLY on the sidecar, never mixes codes)
-    if (IndexMaintenance.hasManifest(spark, dir))
-      IndexMaintenance.rebuild(spark, dir)(writeTo)
-    else writeTo(dir)
+    IndexMaintenance.writeIndex(candidates.sparkSession, dir, IvfPqLayout,
+        modelSig(centroidVecs, codebooks)) {
+      encodeForIndex(candidates, centroidVecs, codebooks, idC, vecCol)
+    }
   }
 
+  /** The IVF-PQ layout: code rows partitioned by `centroid_id`, guarded
+    * by the model fingerprint sidecar — PQ codes are meaningless across
+    * models, so append/serve under another model fail LOUDLY instead of
+    * silently mixing incompatible codes. */
+  private val IvfPqLayout = IndexMaintenance.Layout("centroid_id", "_graft_model", "model")
+
   /** Deterministic fingerprint of the (centroids, codebooks) model a
-    * persisted index was encoded under — PQ codes are meaningless across
-    * models, so the sidecar lets append/serve fail LOUDLY on a model
-    * mismatch instead of silently mixing incompatible codes. */
+    * persisted index was encoded under ([[IvfPqLayout]]'s parameter
+    * string). */
   private def modelSig(
       centroidVecs: Seq[Array[Double]],
       codebooks: Array[Array[Array[Double]]]): String = {
@@ -1249,36 +1247,6 @@ object Similarity {
     centroidVecs.foreach(_.foreach(feed))
     codebooks.foreach(_.foreach(_.foreach(feed)))
     md.digest().map("%02x".format(_)).mkString
-  }
-
-  private val SigFile = "_graft_model"
-
-  private def writeModelSig(spark: org.apache.spark.sql.SparkSession, dir: String,
-      centroidVecs: Seq[Array[Double]], codebooks: Array[Array[Array[Double]]]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, SigFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(modelSig(centroidVecs, codebooks).getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Throws when `dir` carries a model sidecar that does not match the
-    * supplied model. Indexes written before the sidecar existed (or by
-    * external tools) pass unchecked. */
-  private def requireModelMatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-      centroidVecs: Seq[Array[Double]], codebooks: Array[Array[Array[Double]]],
-      api: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, SigFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val stored = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      val given = modelSig(centroidVecs, codebooks)
-      require(stored == given,
-        s"$api: index at $dir was built under a different model " +
-          s"(stored $stored, supplied $given) — PQ codes are not portable " +
-          "across models; rebuild with writeIvfPqIndex")
-    }
   }
 
   /** Incremental maintenance of a [[writeIvfPqIndex]] layout (r11 — the
@@ -1308,10 +1276,10 @@ object Similarity {
       idC: String = "cid",
       vecCol: String = "embedding"): Unit = {
     // manifest-aware (r12): appends land in the LIVE generation
-    val live = IndexMaintenance.resolveLive(newRows.sparkSession, dir)
-    requireModelMatch(newRows.sparkSession, live, centroidVecs, codebooks, "appendIvfPqIndex")
-    encodeForIndex(newRows, centroidVecs, codebooks, idC, vecCol)
-      .write.mode("append").partitionBy("centroid_id").parquet(live)
+    IndexMaintenance.appendIndex(newRows.sparkSession, dir, IvfPqLayout,
+        modelSig(centroidVecs, codebooks), "appendIvfPqIndex") {
+      encodeForIndex(newRows, centroidVecs, codebooks, idC, vecCol)
+    }
   }
 
   /** One-file-per-cell compaction of a [[writeIvfPqIndex]] layout after
@@ -1321,7 +1289,8 @@ object Similarity {
     * ([[IndexMaintenance.compact]] for the mechanics). */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       swap: Boolean = true): String =
-    IndexMaintenance.compact(spark, dir, "centroid_id", swap, tombstoneIdCol = Some("cid"))
+    IndexMaintenance.compact(spark, dir, IvfPqLayout.partitionCol, swap,
+      tombstoneIdCol = Some("cid"))
 
   /** DELETE candidate vectors from a [[writeIvfPqIndex]] layout —
     * tombstoned immediately ([[IndexMaintenance.tombstone]]), excluded
@@ -1374,12 +1343,9 @@ object Similarity {
     // resolveLive per probe (r12): a manifest-pointer compaction swap is
     // picked up atomically by the next probe/micro-batch; tombstones
     // stay at the root (pending deletes are generation-independent)
-    val live = IndexMaintenance.resolveLive(queries.sparkSession, indexDir)
-    requireModelMatch(queries.sparkSession, live, centroidVecs, codebooks,
-      "ivfPqTopKIndexed")
+    val codes = IndexMaintenance.readIndex(queries.sparkSession, indexDir, IvfPqLayout,
+      modelSig(centroidVecs, codebooks), "ivfPqTopKIndexed", idC)
     val m = codebooks.length
-    val codes = IndexMaintenance.filterTombstoned(queries.sparkSession, indexDir,
-      queries.sparkSession.read.parquet(live), idC)
     val qAssigned = assignCells(
       queries.select(col(idQ), col(vecCol).as("_qv")), centroidVecs, "_qv", nProbe)
     // STATIC partition pruning on the probed cells (r12): the probed

@@ -93,6 +93,22 @@ class BenchSentinelSpec extends AnyFunSuite {
     assert(m2 === Map("01" -> 1.2) && sf2 === Some("sf0.01"))
   }
 
+  test("archive parsing: the decisecond unit is found however many fields precede the queries map") {
+    // a field between qunit and queries pushes qunit far from the map
+    val notes = "x" * 120
+    val tail = s"""{"n": 19, "tail": "{\\"metric\\":\\"detail\\",\\"qunit\\":\\"s\\"}\\n{\\"metric\\":\\"total\\",\\"value\\":1.0,\\"unit\\":\\"sec\\",\\"qunit\\":\\"ds\\",\\"notes\\":\\"$notes\\",\\"queries\\":{\\"01\\":9,\\"45\\":25},\\"sf\\":\\"sf0.1\\"}\\n"}"""
+    val (meds, sf) = BenchSentinel.parsePrevMedians(tail)
+    assert(meds === Map("01" -> 0.9, "45" -> 2.5))
+    assert(sf === Some("sf0.1"))
+    val raw = s"""{"metric":"total","value":1.2,"unit":"sec","qunit":"ds","notes":"$notes","queries":{"01":12},"sf":"sf0.01"}"""
+    assert(BenchSentinel.parsePrevMedians(raw)._1 === Map("01" -> 1.2))
+    // a seconds-unit contract line stays in seconds even when an earlier
+    // line of the tail carries the decisecond tag
+    val mixed = """{"metric":"detail","qunit":"ds"}""" + "\n" +
+      s"""{"metric":"total","value":1.2,"unit":"sec","notes":"$notes","queries":{"01":1.2},"sf":"sf0.01"}"""
+    assert(BenchSentinel.parsePrevMedians(mixed)._1 === Map("01" -> 1.2))
+  }
+
   test("newestPrevFile picks the highest round number") {
     val dir = java.nio.file.Files.createTempDirectory("benchsent").toFile
     try {
